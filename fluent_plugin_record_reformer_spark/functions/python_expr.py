@@ -11,8 +11,10 @@ Here the snippet is a PYTHON expression evaluated ONCE PER ARROW BATCH
 over ``pandas.Series`` columns (never per row): record columns bind by
 name (the ``method_missing`` analog), plus ``tag``, ``time``,
 ``tag_parts`` (a list-valued Series), ``hostname``, ``pd``, ``np``,
-``re`` and a small builtin whitelist. A failing expression yields null
-for the whole field, mirroring nil-on-error.
+``re`` and a small builtin whitelist. When the batch evaluation
+raises, the batch is evaluated again row by row and only the rows that
+raise yield null, mirroring the reference's per-event nil-on-error, so
+a result never depends on where Arrow cut the batches.
 
 Example specs::
 
@@ -116,10 +118,7 @@ def python_expr_column(
     if not cols:  # constant expression: still need one column for batch length
         cols = [df.columns[0]]
 
-    @F.pandas_udf(ret_type)
-    def _eval(batch: pd.Series) -> pd.Series:
-        # batch is a pd.DataFrame when the input is a struct column
-        frame: pd.DataFrame = batch  # type: ignore[assignment]
+    def _run(frame: pd.DataFrame) -> pd.Series:
         env: dict[str, object] = {c: frame[c] for c in frame.columns}
         if tag_col in frame.columns:
             env["tag"] = frame[tag_col]
@@ -134,13 +133,30 @@ def python_expr_column(
         # aren't valid Python names (record['@timestamp'])
         env["record"] = frame
         env.update({"hostname": hostname, "pd": pd, "np": np, "re": _re})
-        try:
-            out = eval(code, {"__builtins__": _SAFE_BUILTINS}, env)
-        except Exception:
-            # nil-on-error, mirrors core.rb:315-319
-            return pd.Series([None] * len(frame))
+        out = eval(code, {"__builtins__": _SAFE_BUILTINS}, env)
         if not isinstance(out, pd.Series):
             out = pd.Series([out] * len(frame))
+        return out
+
+    def _row(frame: pd.DataFrame, i: int):
+        try:
+            v = _run(frame.iloc[i : i + 1]).iloc[0]
+        except Exception:
+            return None  # nil-on-error for this event, mirrors core.rb:315-319
+        return None if pd.api.types.is_scalar(v) and pd.isna(v) else v
+
+    @F.pandas_udf(ret_type)
+    def _eval(batch: pd.Series) -> pd.Series:
+        # batch is a pd.DataFrame when the input is a struct column
+        frame: pd.DataFrame = batch  # type: ignore[assignment]
+        try:
+            out = _run(frame)
+        except Exception:
+            # some row raised: evaluate row by row so only those get null
+            out = pd.Series([_row(frame, i) for i in range(len(frame))], dtype=object)
+            if ret_type == "string":
+                out = out.map(lambda x: None if x is None else str(x))
+            return out
         if ret_type == "string" and out.dtype != object:
             # declared-type coercion: stringify non-null values so the
             # Arrow writer accepts heterogeneous expression results

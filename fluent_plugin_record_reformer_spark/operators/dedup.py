@@ -286,41 +286,6 @@ def lsh_near_dup(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.0,
-) -> DataFrame:
-    """Exact shingle-hash Jaccard for candidate pairs that arrived
-    WITHOUT sets (e.g. from an external candidate source); keep >=
-    threshold. Prefer :func:`lsh_near_dup` for the LSH pipeline — it
-    skips both joins. |A u B| = |A| + |B| - |A n B| on distinct shingle
-    hash sets, so only int64 arrays cross the join."""
-    sets = (
-        _exploded_shingle_hashes(df, text_col=text_col, id_col=id_col, shingle_n=shingle_n)
-        .groupBy(id_col)
-        .agg(F.collect_set("_h60").alias("_set"))
-    )
-    a = sets.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_set_a"))
-    b = sets.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_set_b"))
-    inter = F.size(F.array_intersect("_set_a", "_set_b"))
-    union = F.size("_set_a") + F.size("_set_b") - inter
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(inter.cast("double") / union, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def fingerprint_near_dup(
     df: DataFrame,
     *,
@@ -798,23 +763,6 @@ def simhash_by_id(
     for b in range(bits):
         sim = sim + F.when(F.col(f"_v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
     return votes.select(F.col(id_col), sim.alias("simhash"))
-
-
-def with_simhash(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "simhash",
-    bits: int = 16,
-) -> DataFrame:
-    """All input columns + a simhash column (joins :func:`simhash_by_id`
-    back on the id — when only (id, simhash) is needed, use
-    simhash_by_id directly and skip the join)."""
-    sims = simhash_by_id(df, id_col=id_col, text_col=text_col, bits=bits)
-    if out_col != "simhash":
-        sims = sims.withColumnRenamed("simhash", out_col)
-    return df.join(sims, id_col)
 
 
 def doc_fingerprints(

@@ -9,6 +9,17 @@ in ONE pass via ``partitionBy`` on the route column — at 100 TB, N
 filtered writes would mean N full scans; one partitioned write means
 one.
 
+A fan-out write keeps only matched rows, and it routes each row ONCE:
+:meth:`RouteTable.routed` assigns the route and drops unmatched rows in
+the same generator expression. A ``route != UNMATCHED`` filter instead
+lets Catalyst push the predicate below reform, enrich and parse,
+substituting every alias on the way, so the route ``CASE`` (one
+``RLIKE`` per glob over a rewritten-tag expression copied in many
+times) is evaluated a second time per row, uneliminated by
+``FilterExec``. On the checkpointed commit that pushed the stage's
+generated ``processNext`` past HotSpot's 8,000-byte huge-method limit,
+and the JVM interpreted the whole row loop.
+
 fluentd glob semantics (public fluentd match rules):
 - ``*``  matches exactly one tag part: ``a.*`` matches ``a.b``,
   not ``a`` or ``a.b.c``
@@ -22,7 +33,6 @@ fluentd glob semantics (public fluentd match rules):
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 from typing import Optional, Sequence
@@ -148,10 +158,11 @@ class RouteTable:
     def __init__(self, routes: Sequence[Route]):
         self.routes = list(routes)
 
-    def route_column(self, tag_col: str = "tag") -> Column:
+    def route_column(self, tag_col: str = "tag", unmatched: Optional[str] = UNMATCHED) -> Column:
         """One CASE expression assigning each event its sink name —
-        a single codegen'd pass, no per-route scans."""
-        col = F.lit(UNMATCHED)
+        a single codegen'd pass, no per-route scans. Events no route
+        matches (a null tag included) get ``unmatched``."""
+        col = F.lit(unmatched) if unmatched is not None else F.lit(None).cast("string")
         expr: Optional[Column] = None
         for r in self.routes:
             cond = F.col(tag_col).rlike(glob_to_regex(r.pattern))
@@ -161,9 +172,16 @@ class RouteTable:
     def assign(self, df: DataFrame, tag_col: str = "tag", route_col: str = "route") -> DataFrame:
         return df.withColumn(route_col, self.route_column(tag_col))
 
-    def only(self, df: DataFrame, name: str, tag_col: str = "tag") -> DataFrame:
-        """Events for one sink (respecting first-match precedence)."""
-        return self.assign(df, tag_col).filter(F.col("route") == name).drop("route")
+    def routed(self, df: DataFrame, tag_col: str = "tag", drop_unmatched: bool = True) -> DataFrame:
+        """:meth:`assign`, keeping only matched events when
+        ``drop_unmatched``. The route is computed once per event, by a
+        generator over ``[CASE ... ELSE NULL END]`` with the null
+        compacted away: an unmatched event yields no row, and there is
+        no filter for Catalyst to push below the tag rewrite."""
+        if not drop_unmatched:
+            return self.assign(df, tag_col)
+        route = F.explode(F.array_compact(F.array(self.route_column(tag_col, None))))
+        return df.drop("route").select("*", route.alias("route"))
 
 
 def write_fanout(
@@ -182,20 +200,13 @@ def write_fanout(
     hidden-partitioning structure so downstream per-sink readers get
     partition pruning for free.
     """
-    routed = table.assign(df, tag_col)
-    if drop_unmatched:
-        routed = routed.filter(F.col("route") != UNMATCHED)
     (
-        routed.write.mode(mode)
+        table.routed(df, tag_col, drop_unmatched=drop_unmatched)
+        .write.mode(mode)
         .partitionBy("route", *extra_partition_cols)
         .format(fmt)
         .save(base_path)
     )
-
-
-def read_sink(spark, base_path: str, name: str) -> DataFrame:
-    """Read one sink back (partition-pruned scan of route=<name>)."""
-    return spark.read.parquet(base_path).filter(F.col("route") == name)
 
 
 def write_fanout_catalog(
@@ -214,11 +225,9 @@ def write_fanout_catalog(
     snapshot covering every route; on the parquet fallback it is the
     same partitionBy layout as :func:`write_fanout`. The preferred
     shape at 100 TB — one scan, one write."""
-    routed = table.assign(df, tag_col)
-    if drop_unmatched:
-        routed = routed.filter(F.col("route") != UNMATCHED)
     catalog.write(
-        routed, sink_name, mode=mode, partition_by=("route", *extra_partition_cols)
+        table.routed(df, tag_col, drop_unmatched=drop_unmatched),
+        sink_name, mode=mode, partition_by=("route", *extra_partition_cols)
     )
 
 
@@ -237,7 +246,7 @@ def write_fanout_tables(
     sinks can share a table with a route partition. Returns
     {route -> table name}."""
     table_for_route = table_for_route or (lambda r: f"sink_{r}")
-    routed = table.assign(df, tag_col).filter(F.col("route") != UNMATCHED).persist()
+    routed = table.routed(df, tag_col).persist()
     written: dict[str, str] = {}
     try:
         for r in table.routes:

@@ -41,7 +41,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.route import UNMATCHED, RouteTable
+from ..operators.route import RouteTable
 
 @dataclass
 class ManifestEntry:
@@ -103,6 +103,13 @@ def checkpointed_fanout(
     column-pruning transform silently broke). Per-sink metrics ride
     each write via ``DataFrame.observe`` — no extra scan.
 
+    Unmatched rows are dropped by :meth:`RouteTable.routed`, which
+    evaluates the route once per row. A ``route != UNMATCHED`` filter
+    here was pushed below ``transform`` with every alias substituted,
+    so each row paid the route's regexes twice over a copied-in tag
+    rewrite, and the commit stage's generated row loop grew too large
+    for the JIT to compile.
+
     Inputs must be transform-complete shards (e.g. all events of a set
     of conversations): the transform sees one shard at a time.
     """
@@ -125,9 +132,9 @@ def checkpointed_fanout(
                 shutil.rmtree(d)
 
         t0 = time.time()
-        routed = routes.assign(transform(spark.read.parquet(p)), tag_col)
-        if drop_unmatched:
-            routed = routed.filter(F.col("route") != UNMATCHED)
+        routed = routes.routed(
+            transform(spark.read.parquet(p)), tag_col, drop_unmatched=drop_unmatched
+        )
         obs = Observation(f"lineage_{batch_id}")
         observed = routed.observe(
             obs,

@@ -158,8 +158,3 @@ def tokenize(template: str) -> list[Token]:
         tokens.append(Literal(template[pos:]))
     return tokens
 
-
-def is_single_placeholder(template: str) -> bool:
-    """auto_typecast single-placeholder rule (core.rb:230):
-    the template is EXACTLY one placeholder, nothing else."""
-    return re.fullmatch(r"\$\{[^}]+\}|__[A-Z_]+__", template) is not None

@@ -20,6 +20,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """48g, or 40% of physical RAM on a smaller host: in local mode the
+    whole engine (heap plus the JVM's off-heap use) and the Python
+    workers share the host, and a heap sized past it lets the JVM grow
+    until the kernel kills it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb * 2 // 5)}m"
+
+
 def get_spark(
     app_name: str = "record-reformer-spark",
     cpus: int | str | None = None,
@@ -30,7 +39,7 @@ def get_spark(
     cpus = str(cpus)
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus) * 2, 8)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     # ParallelGC over the G1 default: this engine's hot path is
     # string-heavy batch work (grok regex extraction, template
     # concat), where throughput-oriented ParallelGC A/B-measured

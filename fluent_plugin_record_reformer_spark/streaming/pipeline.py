@@ -24,7 +24,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..operators.reform import ReformContext, reform
-from ..operators.route import UNMATCHED, RouteTable
+from ..operators.route import RouteTable
 from ..plans.spec import TransformSpec
 
 TRANSCRIPT_SCHEMA = (
@@ -67,11 +67,9 @@ def reform_fanout_stream(
     and backfills); omit it for a continuous query.
     """
     reformed = reform(stream, spec, ctx)
-    routed = routes.assign(reformed, tag_col)
-    if drop_unmatched:
-        routed = routed.filter(F.col("route") != UNMATCHED)
     writer = (
-        routed.writeStream.format("parquet")
+        routes.routed(reformed, tag_col, drop_unmatched=drop_unmatched)
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .partitionBy("route")

@@ -20,6 +20,7 @@ from fluent_plugin_record_reformer_spark.operators.parse import (
     regex_parse,
 )
 from fluent_plugin_record_reformer_spark.operators.route import (
+    UNMATCHED,
     Route,
     RouteTable,
     glob_to_regex,
@@ -125,6 +126,42 @@ def test_write_fanout_single_pass(spark, tmp_path):
     # partition pruning: reading one route must not scan others
     one = spark.read.parquet(base).filter(F.col("route") == "user_turns")
     assert one.count() == counts["user_turns"]
+
+
+def test_routed_equals_assign_then_drop_unmatched(spark):
+    """``routed`` routes each row once; it keeps exactly the rows, and
+    the routes, of ``assign`` followed by ``route != UNMATCHED``: first
+    match wins, brace alternation expands, a null tag and a glob that
+    matches nothing route nowhere, and an existing route column is
+    replaced."""
+    df = spark.createDataFrame(
+        [
+            ("app.user.x", 1, "old"),
+            ("app.admin", 2, "old"),
+            ("app.tool", 3, "old"),
+            ("app.tool.y", 4, "old"),
+            ("other", 5, "old"),
+            (None, 6, "old"),
+        ],
+        "tag string, v int, route string",
+    )
+    table = RouteTable(
+        [Route("users", "app.{user,admin}.**"), Route("never", "zzz.*"), Route("app", "app.*")]
+    )
+
+    def rows(frame):
+        return sorted((tuple(r) for r in frame.select("tag", "v", "route").collect()), key=lambda r: r[1])
+
+    want = table.assign(df).filter(F.col("route") != UNMATCHED)
+    assert rows(table.routed(df)) == rows(want) == [
+        ("app.user.x", 1, "users"),
+        ("app.admin", 2, "users"),
+        ("app.tool", 3, "app"),
+    ]
+    counts = table.routed(df).groupBy("route").count().collect()
+    assert {r["route"]: r["count"] for r in counts} == {"users": 2, "app": 1}
+    assert rows(table.routed(df, drop_unmatched=False)) == rows(table.assign(df))
+    assert table.routed(df).columns == ["tag", "v", "route"]
 
 
 # ------------------------------------------------------------------ enrich

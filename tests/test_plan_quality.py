@@ -16,12 +16,45 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from fluent_plugin_record_reformer_spark import (  # noqa: E402
+    ReformContext,
+    TransformSpec,
+    reform,
+)
+from fluent_plugin_record_reformer_spark.operators.enrich import enrich, role_dim  # noqa: E402
+from fluent_plugin_record_reformer_spark.operators.parse import grok_parse  # noqa: E402
 from fluent_plugin_record_reformer_spark.sources.tables import load_table  # noqa: E402
+from fluent_plugin_record_reformer_spark.sources.transcripts import (  # noqa: E402
+    transcripts_from_events,
+    with_tag,
+)
 
 SF = "/root/testdata/sf0.01"
+# HotSpot's HugeMethodLimit: a generated method of more bytecode than
+# this is never JIT-compiled, so the stage's row loop runs interpreted.
+HUGE_METHOD_LIMIT = 8000
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _plan_nodes(plan):
+    yield plan
+    for child in _seq(plan.children()):
+        yield from _plan_nodes(child)
+
+
+def _plan_expressions(plan):
+    stack = [e for node in _plan_nodes(plan) for e in _seq(node.expressions())]
+    while stack:
+        e = stack.pop()
+        yield e
+        stack.extend(_seq(e.children()))
 
 
 def _plan(df) -> str:
@@ -330,6 +363,7 @@ def test_corpus_tf_subtree_tokenizes_once(spark, name):
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple"
     )
+    assert "Initial Plan" in plan, "expected an AQE plan with its initial plan"
     final = plan.split("Initial Plan")[0]
     assert final.count("regexp_extract_all") == 1, final.count(
         "regexp_extract_all"
@@ -343,5 +377,62 @@ def test_ip_enrich_no_distinct_aggregate(spark):
     row count — no count(distinct ...) (and its extra aggregate
     pass) may reappear in the plan."""
     df = entrymod.queries()["ip_enrich"](spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "distinct" not in plan.lower(), plan
+    plan = df._jdf.queryExecution().optimizedPlan()
+    distinct = [
+        e.toString()
+        for e in _plan_expressions(plan)
+        if e.getClass().getSimpleName() == "AggregateExpression" and e.isDistinct()
+    ]
+    assert not distinct, distinct
+
+
+def test_fanout_commit_routes_once_within_jit_limit(spark):
+    """One shard's checkpointed_fanout commit (the scripts/run_pipeline.py
+    transform, routed, observed and sorted by route as the partitioned
+    write plans it) evaluates each route's RLIKE once per row, and every
+    whole-stage-codegen method stays under the JIT's huge-method limit.
+    A ``route != UNMATCHED`` filter was pushed below the tag rewrite,
+    doubling the RLIKEs and growing processNext to 8,340 bytes."""
+    events = spark.read.parquet(f"{SF}/events.parquet")
+    parsed = grok_parse(
+        with_tag(transcripts_from_events(events)),
+        "event=%{WORD:etype} value=%{NUMBER:val} props=%{GREEDYDATA:props_raw}",
+        types={"val": "double"},
+    )
+    spec = TransformSpec(
+        tag="reformed.${tag_prefix[-2]}",
+        record={
+            "hostname": "${hostname}",
+            "message": "${record['etype']} by ${record['role_kind']}",
+        },
+        remove_keys=["text", "props_raw"],
+    )
+    reformed = reform(
+        enrich(parsed, role_dim(spark), on="role"), spec, ReformContext(hostname="h")
+    )
+    routes = entrymod.E2E_ROUTES
+    commit = (
+        routes.routed(reformed)
+        .observe(Observation("commit_pin"), F.count(F.lit(1)).alias("n_rows"))
+        .sortWithinPartitions("route")
+    )
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        qe = commit._jdf.queryExecution()
+        rlikes = [
+            e for e in _plan_expressions(qe.optimizedPlan())
+            if e.getClass().getSimpleName() == "RLike"
+        ]
+        stages = [
+            n for n in _plan_nodes(qe.executedPlan())
+            if n.getClass().getSimpleName() == "WholeStageCodegenExec"
+        ]
+        codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+        compiler = getattr(getattr(codegen, "CodeGenerator$"), "MODULE$")
+        sizes = [
+            compiler.compile(n.doCodeGen()._2())._2().maxMethodCodeSize() for n in stages
+        ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(rlikes) == len(routes.routes), [e.toString() for e in rlikes]
+    assert stages and max(sizes) < HUGE_METHOD_LIMIT, sizes

@@ -220,6 +220,30 @@ def test_python_expr_failure_yields_null(spark):
     assert len(rows) == 2 and all(r["bad"] is None for r in rows)
 
 
+def test_python_expr_nulls_only_failing_rows_at_any_batch_size(spark):
+    # core.rb:315-319 nils the failing event only: the row whose value
+    # is null raises in astype(int), the rest keep their values, and
+    # the answer is the same whether Arrow cuts 2 rows or all 8 into
+    # one batch
+    df = spark.createDataFrame(
+        [(i, None if i == 2 else i) for i in range(8)], "id int, value long"
+    ).coalesce(1)
+    df = df.withColumn("tag", F.lit("t")).withColumn("ts", F.lit(TS))
+    spec = TransformSpec(tag="t", python_exprs={"as_int": "value.astype(int)"})
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    got = {}
+    try:
+        for size in (2, 10000):
+            spark.conf.set(key, str(size))
+            out = reform(df, spec, ReformContext(hostname=HOST))
+            got[size] = sorted((r["id"], r["as_int"]) for r in out.collect())
+    finally:
+        spark.conf.set(key, old)
+    want = [(i, None if i == 2 else str(i)) for i in range(8)]
+    assert got[2] == got[10000] == want
+
+
 def test_transcript_pipeline_golden(spark):
     """Flagship: synthetic transcripts → tag → README-example spec;
     per-turn text equality under (conv_id, turn_idx) ordering vs the
